@@ -36,7 +36,6 @@ class ExtractConfig:
 
     # scale mechanics
     num_partitions: int = 64          # manifest width / salted repartition width
-    max_batch_rows: int = 64          # arrow maxRecordsPerBatch guidance (big docs)
     #: how the resume/lineage partition_id is derived (PLANS.md §1):
     #: - "file" (default, scale-safe): hash of the input file name — the
     #:   binary html column NEVER crosses an exchange; extraction is pure

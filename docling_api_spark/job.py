@@ -22,11 +22,17 @@ lineage/metrics land next to the output (``<output>_manifest``,
 On a real cluster, size ``--partitions`` to the resume granularity you
 want (it is the manifest width, not the task count). The default
 ``--partition-mode file`` keys the manifest on input files and runs the
-whole job as ONE map stage — the page bytes never cross an exchange;
+whole job as ONE map stage — the page bytes never cross an exchange.
+Its task count is derived, not set: the scan splits are narrowed with a
+``coalesce`` to one Python task per executor slot, or one per
+``spark.sql.files.maxPartitionBytes`` of input when that is more
+(``plans/pipeline.py``), because each Python task pays a fixed start-up
+cost. That only changes the task count of an input of many files far
+smaller than ``spark.sql.files.openCostInBytes``.
 ``--partition-mode salted`` (``pmod(xxhash64(url), P)`` + repartition)
-is the opt-in for pathologically skewed input layouts, and there size
-``--partitions`` to ~2-4x total executor cores and let AQE handle
-stragglers.
+is the opt-in for pathologically skewed input layouts; there
+``--partitions`` is also the task count, so size it to ~2-4x total
+executor cores and let AQE handle stragglers.
 
 This replaces the reference's whole service surface (FastAPI endpoints +
 Celery queue + Redis backend — ``main.py``, ``worker/celery_config.py:5-11``,

@@ -166,10 +166,9 @@ def make_convert_fn(cfg: ExtractConfig):
 
     def convert_partition(batches):
         for pdf in batches:
-            t0 = time.perf_counter()
             n = len(pdf)
             fmts, mds, imgs, spans, errs = [], [], [], [], []
-            bytes_in, bytes_out = [], []
+            bytes_in, bytes_out, parse_ms = [], [], []
             part_ids = pdf["partition_id"] if "partition_id" in pdf.columns else None
             for i in range(n):
                 content = pdf["html"].iat[i]
@@ -179,7 +178,9 @@ def make_convert_fn(cfg: ExtractConfig):
                     # test hook for the resume/kill test — never set in prod
                     raise RuntimeError(
                         f"injected failure in partition {int(part_ids.iat[i])}")
+                t0 = time.perf_counter()
                 r = convert_one(content, url, cfg)
+                parse_ms.append((time.perf_counter() - t0) * 1000.0)
                 fmts.append(r["fmt"])
                 mds.append(r["markdown"])
                 imgs.append(r["images"])
@@ -188,8 +189,6 @@ def make_convert_fn(cfg: ExtractConfig):
                 bytes_in.append(0 if content is None else len(content))
                 bytes_out.append(0 if r["markdown"] is None
                                  else len(r["markdown"].encode("utf-8")))
-            wall_ms = (time.perf_counter() - t0) * 1000.0
-            per_doc = wall_ms / n if n else 0.0
             yield pd.DataFrame({
                 "url": pdf["url"],
                 "warc_ts": pdf["warc_ts"] if "warc_ts" in pdf.columns
@@ -203,7 +202,7 @@ def make_convert_fn(cfg: ExtractConfig):
                 "error": pd.Series(errs, dtype="object", index=pdf.index),
                 "bytes_in": pd.Series(bytes_in, dtype="int64", index=pdf.index),
                 "bytes_out": pd.Series(bytes_out, dtype="int64", index=pdf.index),
-                "parse_ms": pd.Series([per_doc] * n, dtype="float64", index=pdf.index),
+                "parse_ms": pd.Series(parse_ms, dtype="float64", index=pdf.index),
                 "partition_id": (part_ids.astype("int32") if part_ids is not None
                                  else pd.Series([0] * n, dtype="int32", index=pdf.index)),
             })

@@ -9,7 +9,9 @@ state machine, ``service.py:151-204``; Redis result backend,
   done partitions (SURVEY.md Table B: joins row);
 - ``metrics(run_id, partition_id, docs, bytes_in, bytes_out, n_errors,
   failure_codes map<string,bigint>, wall_ms)`` — per-partition lineage
-  (north_rule requirement).
+  (north_rule requirement); ``wall_ms`` sums the rows' per-document
+  ``parse_ms``, i.e. conversion time without the per-batch Arrow/pandas
+  handling.
 
 Idempotency: results are written with dynamic partition overwrite keyed by
 ``partition_id``, so recomputing a partition rewrites exactly its directory;

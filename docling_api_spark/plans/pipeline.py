@@ -5,16 +5,26 @@ This is the Spark re-expression of the reference's whole service surface
 (SURVEY.md §3.4): admission = error rows, queueing = the Spark scheduler,
 polling = manifest reads, result backend = the output table.
 
-Scale design (100 TB / 1000-executor intent, tested on local[32]):
+Scale design (100 TB / 1000-executor intent):
 - **zero shuffles by default** (``partition_mode="file"``): the resume/
   lineage unit is ``partition_id = pmod(xxhash64(input_file_name()), P)``
   — a pure function of the row's input file, computable map-side, so the
   binary ``html`` column never crosses an exchange and extraction + write
   are one map stage. partition_id only decides the OUTPUT directory and
-  the resume granularity; compute distribution is the scan's split
-  planning, which Spark already balances (a file maps to many splits).
-  At 100 TB the old salted default shuffled 100 TB of page bytes for
-  nothing (measured 2x throughput cost at bench scale — PLANS.md §1);
+  the resume granularity. At 100 TB the old salted default shuffled
+  100 TB of page bytes for nothing (measured 2x throughput cost at bench
+  scale — PLANS.md §1);
+- **map tasks sized to the executor slots**: every Python task pays a
+  fixed ~0.25 s at the worker boundary, so after ``partition_id`` is
+  computed per scan split the plan narrows with a ``coalesce`` (never an
+  exchange) to ``max(defaultParallelism, ceil(scan bytes /
+  maxPartitionBytes))`` tasks. That is Spark's own split planning
+  without the per-file ``openCostInBytes``, so it changes the task count
+  only where files far smaller than the open cost (default 4 MB) were
+  packed into more splits than their bytes need — more than ~32 such
+  files per slot at the default settings; a large scan keeps about its
+  own split count. The scan bytes come from the plan's statistics; an
+  input of unknown size (in-memory frames) is not coalesced;
 - ``partition_mode="salted"`` (opt-in): ``pmod(xxhash64(url), P)`` + an
   explicit repartition — for inputs whose *layout* is pathologically
   skewed (one giant unsplittable file, hot-host row clustering in a
@@ -64,22 +74,63 @@ def add_partition_id(pages: DataFrame, num_partitions: int,
         F.pmod(F.xxhash64(key), F.lit(num_partitions)).cast("int"))
 
 
+def scan_bytes(df: DataFrame) -> int | None:
+    """Input bytes under ``df``: the sum of its optimized plan's leaf
+    statistics (file sizes for a file scan). Reads plan statistics only;
+    no Spark job runs. None when a leaf's size is unknown — an in-memory
+    RDD or a source without statistics reports ``defaultSizeInBytes``."""
+    jspark = df.sparkSession._jsparkSession
+    unknown = jspark.sessionState().conf().defaultSizeInBytes()
+    it = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    total = 0
+    while it.hasNext():
+        size = int(it.next().stats().sizeInBytes())
+        if size >= unknown:
+            return None
+        total += size
+    return total
+
+
+def map_tasks(nbytes: int | None, slots: int, split_bytes: int) -> int | None:
+    """Python map tasks for a scan of ``nbytes``: one per slot, or one per
+    ``split_bytes`` (the session's ``maxPartitionBytes``) when that is
+    more — Spark's own split planning without the per-file open cost, so
+    a large scan keeps about its split count and a lowered split size
+    still bounds the bytes per task. None (no coalesce) when the size is
+    unknown."""
+    if nbytes is None:
+        return None
+    return max(slots, -(-nbytes // split_bytes))
+
+
 def extract_df(pages: DataFrame, cfg: ExtractConfig,
-               repartition: bool | None = None) -> DataFrame:
-    """Lazy extraction plan over a pages DataFrame (no write).
+               done: DataFrame | None = None) -> DataFrame:
+    """Lazy extraction plan over a pages DataFrame (no write): select →
+    partition_id → [anti-join of the ``done`` partitions] → salted
+    repartition or slot-sized coalesce → mapInPandas.
 
     Default (``cfg.partition_mode='file'``) is a single map stage: no
-    exchange anywhere, the page bytes stay on the scan task. Salted mode
-    repartitions on the url-hash key; the plan column-prunes to exactly
-    the fields the extractor needs before that shuffle so it never
-    carries unused columns. ``repartition`` overrides the mode's default
-    (kept for tests/benchmarks that isolate the shuffle cost)."""
+    exchange anywhere, the page bytes stay on the scan task, and the
+    scan splits are narrowed with a ``coalesce`` to :func:`map_tasks`.
+    ``partition_id`` is computed before the coalesce, so each row is
+    keyed on its own scan split's file. Salted mode repartitions on the
+    url-hash key; the plan column-prunes to exactly the fields the
+    extractor needs before that shuffle so it never carries unused
+    columns."""
     df = pages.select("url", "warc_ts", "html", "lang")
     df = add_partition_id(df, cfg.num_partitions, cfg.partition_mode)
-    if repartition is None:
-        repartition = cfg.partition_mode == "salted"
-    if repartition:
+    if done is not None:
+        df = mf.anti_join_done(df, done)
+    if cfg.partition_mode == "salted":
         df = df.repartition(cfg.num_partitions, "partition_id")
+    else:
+        spark = pages.sparkSession
+        conf = spark._jsparkSession.sessionState().conf()
+        tasks = map_tasks(scan_bytes(pages),
+                          spark.sparkContext.defaultParallelism,
+                          int(conf.filesMaxPartitionBytes()))
+        if tasks is not None:
+            df = df.coalesce(tasks)
     return df.mapInPandas(make_convert_fn(cfg), RESULT_DDL)
 
 
@@ -105,17 +156,10 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
     metrics_path = metrics_path or output_path + "_metrics"
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    df = pages.select("url", "warc_ts", "html", "lang")
-    df = add_partition_id(df, cfg.num_partitions, cfg.partition_mode)
     done = mf.read_done_partitions(spark, manifest_path, run_id) if resume else None
     prior_done = set() if done is None else \
         {r.partition_id for r in done.collect()}
-    if prior_done:
-        df = mf.anti_join_done(df, done)
-
-    if cfg.partition_mode == "salted":
-        df = df.repartition(cfg.num_partitions, "partition_id")
-    out = df.mapInPandas(make_convert_fn(cfg), RESULT_DDL)
+    out = extract_df(pages, cfg, done if prior_done else None)
     (out.write.mode("overwrite").partitionBy("partition_id")
         .parquet(output_path))
 

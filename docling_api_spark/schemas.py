@@ -57,7 +57,7 @@ RESULT_SCHEMA = T.StructType([
     T.StructField("error", T.StringType(), True),     # failure code (FIXTURES.md §2 taxonomy)
     T.StructField("bytes_in", T.LongType(), True),
     T.StructField("bytes_out", T.LongType(), True),
-    T.StructField("parse_ms", T.DoubleType(), True),
+    T.StructField("parse_ms", T.DoubleType(), True),   # this document's convert_one time
     T.StructField("partition_id", T.IntegerType(), True),
 ])
 
@@ -85,6 +85,8 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("bytes_out", T.LongType(), True),
     T.StructField("n_errors", T.LongType(), True),
     T.StructField("failure_codes", T.MapType(T.StringType(), T.LongType()), True),
+    # sum of the partition's parse_ms: conversion time only, without the
+    # per-batch Arrow/pandas handling around it
     T.StructField("wall_ms", T.DoubleType(), True),
 ])
 

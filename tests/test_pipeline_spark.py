@@ -1,16 +1,18 @@
 """Spark end-to-end tests: golden e2e, dedup window, resume, parallelism
 invariance (SURVEY.md §5.2 items 1/3/5)."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F, Window as W
 
 from docling_api_spark.config import ExtractConfig
-from docling_api_spark.operators.convert import convert_one
+from docling_api_spark.operators.convert import convert_one, make_convert_fn
 from docling_api_spark.plans import manifest as mf
 from docling_api_spark.plans.pipeline import (
-    add_partition_id, extract_df, run_extraction)
+    add_partition_id, extract_df, map_tasks, run_extraction, scan_bytes)
 from docling_api_spark.sources.corpus import (
-    FIXTURE_CLASSES, corpus_df, make_corpus, make_url)
+    FIXTURE_CLASSES, corpus_df, huge_page, make_corpus, make_url,
+    md_passthrough, pdf_text_multipage)
 
 CFG = ExtractConfig(num_partitions=8)
 
@@ -125,19 +127,117 @@ def _plan_str(df) -> str:
     return buf.getvalue()
 
 
-def test_file_mode_no_shuffle_plan(spark, pages, tmp_path):
+@pytest.fixture
+def split_pages(spark, pages, tmp_path):
+    """The corpus as 8 parquet files read at one scan split per file, as
+    a directory of hundreds of small files would be: with the split cap
+    at the per-file open cost (4 MiB) no two files fit in one split.
+    Spark otherwise packs 8 small files into about one split per slot,
+    and the coalesce would have nothing to narrow."""
+    inp = str(tmp_path / "pages_in")
+    pages.repartition(8).write.mode("overwrite").parquet(inp)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, spark.conf.get("spark.sql.files.openCostInBytes"))
+    try:
+        yield spark.read.parquet(inp)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_file_mode_no_shuffle_plan(spark, split_pages):
     """The scale contract of the default mode: extraction is ONE map stage —
     no Exchange anywhere in the plan (at 100 TB a pre-extraction shuffle
-    moves 100 TB of page bytes)."""
-    inp = str(tmp_path / "pages_in")
-    pages.repartition(4).write.mode("overwrite").parquet(inp)
-    fpages = spark.read.parquet(inp)
-    plan = _plan_str(extract_df(fpages, ExtractConfig(num_partitions=8)))
-    assert "Exchange" not in plan, plan
-    # salted mode keeps its (opt-in) repartition
-    salted = extract_df(fpages, ExtractConfig(num_partitions=8,
-                                              partition_mode="salted"))
+    moves 100 TB of page bytes) — and a small scan of many splits runs
+    as at most one Python task per slot."""
+    slots = spark.sparkContext.defaultParallelism
+    assert split_pages.rdd.getNumPartitions() >= 8 > slots
+    out = extract_df(split_pages, ExtractConfig(num_partitions=8))
+    assert "Exchange" not in _plan_str(out), _plan_str(out)
+    assert out.rdd.getNumPartitions() <= slots
+    # salted mode keeps its (opt-in) repartition and is not coalesced
+    salted = extract_df(split_pages, ExtractConfig(num_partitions=8,
+                                                   partition_mode="salted"))
     assert "Exchange" in _plan_str(salted)
+    assert salted.rdd.getNumPartitions() == 8
+
+
+def test_coalesce_keeps_file_partition_ids(spark, split_pages):
+    """partition_id is computed per scan split before the coalesce: every
+    url keeps the id its own input file gives it on the un-coalesced
+    scan."""
+    cfg = ExtractConfig(num_partitions=8)
+    want = add_partition_id(split_pages, 8, "file") \
+        .select("url", "warc_ts", "partition_id").collect()
+    assert len({r.partition_id for r in want}) > 1
+    out = extract_df(split_pages, cfg)
+    assert out.rdd.getNumPartitions() < split_pages.rdd.getNumPartitions()
+    got = out.select("url", "warc_ts", "partition_id").collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_map_task_sizing_rule(spark, split_pages):
+    """One Python task per slot for a small scan, one per split size for
+    a large one, and no coalesce when the input size is unknown."""
+    mib = 2**20
+    assert map_tasks(0, 4, 128 * mib) == 4
+    assert map_tasks(4 * 128 * mib, 4, 128 * mib) == 4
+    assert map_tasks(10 * 128 * mib + 1, 4, 128 * mib) == 11
+    assert map_tasks(None, 4, 128 * mib) is None
+    # the scan size comes from plan statistics, with no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("scan-bytes", "scan-bytes")
+    try:
+        nbytes = scan_bytes(split_pages)
+        unknown = scan_bytes(corpus_df(spark, 4))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("scan-bytes") == []
+    assert nbytes > 0 and unknown is None
+    # an in-memory input of unknown size is not coalesced
+    mem = corpus_df(spark, 16).repartition(8)
+    assert extract_df(mem, CFG).rdd.getNumPartitions() == 8
+
+
+@pytest.mark.parametrize("per_split", [6, 64])
+def test_lowered_split_size_honoured(spark, split_pages, per_split):
+    """The bytes per task follow the session's maxPartitionBytes: lowered
+    to a sixth of the scan it gives more tasks than slots, and at a 64th
+    the scan (then above slots × split size) keeps about its own split
+    count — at most each file's last, partial split is merged."""
+    slots = spark.sparkContext.defaultParallelism
+    nbytes = scan_bytes(split_pages)
+    split = nbytes // per_split
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(split))
+    try:
+        scan = spark.read.parquet(*split_pages.inputFiles())
+        want = min(map_tasks(nbytes, slots, split),
+                   scan.rdd.getNumPartitions())
+        got = extract_df(scan, CFG).rdd.getNumPartitions()
+    finally:
+        spark.conf.set(key, old)
+    assert want > slots
+    assert got == want
+    if per_split == 64:
+        files = len(split_pages.inputFiles())
+        assert got >= scan.rdd.getNumPartitions() - files
+
+
+def test_parse_ms_per_row():
+    """parse_ms is each document's own conversion time, not the batch
+    average copied to every row."""
+    rows = make_corpus(3, classes=[md_passthrough, huge_page,
+                                   pdf_text_multipage], dup_fraction=0)
+    batch = pd.DataFrame({
+        "url": [r[0] for r in rows], "warc_ts": [r[1] for r in rows],
+        "html": [r[2] for r in rows], "lang": [r[4] for r in rows],
+        "partition_id": [0] * len(rows)})
+    out, = make_convert_fn(CFG)(iter([batch]))
+    ms = list(out["parse_ms"])
+    assert len(set(ms)) == len(ms)
+    assert ms[1] > ms[0]            # a ~1 MB page against a short md doc
 
 
 def test_file_mode_resume_file_keyed(spark, pages, tmp_path):
